@@ -1,14 +1,18 @@
 """The crawl hot-path CPU ledger.
 
-Replays each epoch's fetch of a committed crawl as cumulative pipelines over
-the same bucket-pruned corpus scan the engine ran, and charges the CPU each
-added stage costs to its layer:
+Replays each epoch's fetch of a committed crawl as cumulative pipelines and
+charges the CPU each added stage costs to its layer:
 
 1. scan → noop                                   ``sources``
 2. + broadcast fetch join                        ``crawl.engine`` (fetch join)
 3. + Arrow ``pandas_udf`` that only takes lengths ``extract.udfs`` (transfer)
-4. + ``make_page_extractor``                     ``extract.udfs`` (extraction)
-5. + results parquet write                       ``crawl.engine`` (results write)
+4. + the engine's page extractor                 ``extract.udfs`` (extraction)
+5. + parquet write of the extracted rows         ``crawl.engine`` (results write)
+
+The scan and the extractor are the engine's own (``CrawlEngine._fetch_corpus``
+and the extractor it builds with ``make_page_extractor``), so the ledger
+follows the program when either changes. The join, the Arrow step and the
+write are the ledger's: the engine inlines them in its epoch step.
 
 The rows' sum set against the full crawl's CPU gives the residual: the
 share of crawl CPU no row explains (drain, expand, frontier commit,
@@ -34,61 +38,46 @@ ROWS = (
 RESIDUAL_LIMIT = 0.10
 
 
-def _pipelines(spark, corpus_dir: Path, buckets: int, batch, cfg, out_dir: Path):
+def _pipelines(engine, batch, out_dir: Path):
     import pyspark.sql.functions as F
     from pyspark.sql.functions import pandas_udf
-
-    from fakepilot_spark.extract.udfs import make_page_extractor
 
     @pandas_udf("long")
     def arrow_lengths(html: pd.Series) -> pd.Series:
         return html.map(len)
 
-    bks = [
-        r["b"] for r in batch.select(
-            F.pmod(F.xxhash64("url"), F.lit(buckets)).cast("int").alias("b")
-        ).distinct().collect()
-    ]
-    scan = (
-        spark.read.parquet(str(corpus_dir))
-        .filter(F.col("pbucket").isin(bks))
-        .select("url", "warc_ts", "html")
-    )
+    scan = engine._fetch_corpus(batch)
     fetched = F.broadcast(batch.select("url", "depth")).join(scan, "url", "inner")
-    extract = make_page_extractor(
-        nreviews=cfg.nreviews, with_reviews=True, with_links=True, strict=False
-    )
-    extracted = fetched.select("url", "depth", "warc_ts", extract("html").alias("x"))
-
-    def write():
-        extracted.select(
-            "url", "depth", "warc_ts",
-            F.col("x.company").alias("company"), F.col("x.reviews").alias("reviews"),
-            F.col("x.links").alias("links"), F.col("x.error").alias("extract_error"),
-        ).write.mode("overwrite").parquet(str(out_dir))
-
+    extracted = fetched.select("url", "depth", "warc_ts", engine._extract("html").alias("x"))
     return {
         "scan": lambda: force(scan),
         "fetch_join": lambda: force(fetched),
         "arrow": lambda: force(fetched.select("url", "depth", "warc_ts", arrow_lengths("html"))),
         "extract": lambda: force(extracted),
-        "results_write": write,
+        "results_write": lambda: extracted.select("url", "depth", "warc_ts", "x.*")
+        .write.mode("overwrite").parquet(str(out_dir)),
     }
 
 
-def cpu_ledger(spark, wl, ckpt: Path, cfg, full_cpu_ms_per_page: float, tracer) -> tuple:
-    """(per-layer metrics, report) for the crawl committed at ``ckpt``."""
+def cpu_ledger(spark, wl, pages, ckpt: Path, cfg, epochs: list,
+               full_cpu_ms_per_page: float, tracer) -> tuple:
+    """(per-layer metrics, report) for ``epochs`` of the crawl committed at
+    ``ckpt``; ``full_cpu_ms_per_page`` is the crawl's CPU over the same
+    epochs."""
     import pyspark.sql.functions as F
 
+    from fakepilot_spark.crawl.engine import CrawlEngine
+
+    engine = CrawlEngine(spark, pages, cfg)
+
     results = spark.read.parquet(str(ckpt / "results")).select("epoch", "url", "depth")
-    epochs = sorted(r["epoch"] for r in results.select("epoch").distinct().collect())
     cum = {stage: 0.0 for stage, _ in ROWS}
-    pages = 0
+    n_pages = 0
     out_root = wl.work / "ledger"
     for e in epochs:
         batch = results.where(F.col("epoch") == e).select("url", "depth").cache()
-        pages += batch.count()
-        runs = _pipelines(spark, wl.corpus_dir, wl.buckets, batch, cfg, out_root / f"epoch={e}")
+        n_pages += batch.count()
+        runs = _pipelines(engine, batch, out_root / f"epoch={e}")
         for stage, _ in ROWS:
             with tracer.span("ledger", stage, epoch=e):
                 c0 = tree_cpu_s()
@@ -97,7 +86,7 @@ def cpu_ledger(spark, wl, ckpt: Path, cfg, full_cpu_ms_per_page: float, tracer) 
         batch.unpersist()
     shutil.rmtree(out_root, ignore_errors=True)
 
-    per_page = {stage: cum[stage] * 1000 / max(pages, 1) for stage in cum}
+    per_page = {stage: cum[stage] * 1000 / max(n_pages, 1) for stage in cum}
     metrics, prev = {}, 0.0
     for stage, name in ROWS:
         metrics[name] = per_page[stage] - prev
@@ -106,7 +95,7 @@ def cpu_ledger(spark, wl, ckpt: Path, cfg, full_cpu_ms_per_page: float, tracer) 
     residual = (full_cpu_ms_per_page - explained) / full_cpu_ms_per_page
     metrics["ledger.residual_frac"] = residual
     report = {
-        "pages": pages,
+        "pages": n_pages,
         "rows_cpu_ms_per_page": {name: metrics[name] for _, name in ROWS},
         "explained_cpu_ms_per_page": explained,
         "full_crawl_cpu_ms_per_page": full_cpu_ms_per_page,

@@ -63,13 +63,18 @@ def tree_cpu_s() -> float:
     return sum(table[p][1] for p in _tree(table, os.getpid())) / _CLK
 
 
-def tree_pss_mb() -> float:
-    """Proportional set size of the process tree: resident memory with each
-    shared page split among its sharers, so a freshly forked Python worker
-    does not count its parent's pages twice, as summed RSS would."""
+def python_pss_mb() -> float:
+    """Proportional set size of the process tree's Python processes (this
+    one and the Spark Python workers): resident memory with each shared page
+    split among its sharers, so a freshly forked worker does not count its
+    parent's pages twice, as summed RSS would. The JVM is left out: its
+    resident heap is what G1 has grown to, not what the program uses."""
     total_kb = 0
     for pid in _tree(_proc_table(), os.getpid()):
         try:
+            with open(f"/proc/{pid}/comm", "rb") as f:
+                if f.read().strip() == b"java":
+                    continue
             with open(f"/proc/{pid}/smaps_rollup", "rb") as f:
                 for line in f:
                     if line.startswith(b"Pss:"):
@@ -80,12 +85,22 @@ def tree_pss_mb() -> float:
     return total_kb / 1024
 
 
-class PeakMemory:
-    """Samples the process tree's memory (:func:`tree_pss_mb`) on a
-    background thread and keeps the peak; a context manager around a timed
-    section."""
+def jvm_live_mb(jvm) -> float:
+    """Heap the JVM holds live after a full collection, plus its non-heap
+    in use (metaspace, code cache). Its resident size, or its heap in use at
+    any moment, follows how far G1 has let garbage pile up, which varies by
+    a fifth between identical runs."""
+    jvm.java.lang.System.gc()
+    bean = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    used = bean.getHeapMemoryUsage().getUsed() + bean.getNonHeapMemoryUsage().getUsed()
+    return used / 2**20
 
-    def __init__(self, interval_s: float = 0.5):
+
+class PeakMemory:
+    """Samples :func:`python_pss_mb` on a background thread and keeps the
+    peak; a context manager around a timed section."""
+
+    def __init__(self, interval_s: float = 0.25):
         self.interval_s = interval_s
         self.peak_mb = 0.0
         self._stop = threading.Event()
@@ -93,7 +108,7 @@ class PeakMemory:
 
     def _loop(self) -> None:
         while True:
-            self.peak_mb = max(self.peak_mb, tree_pss_mb())
+            self.peak_mb = max(self.peak_mb, python_pss_mb())
             if self._stop.wait(self.interval_s):
                 return
 
@@ -105,7 +120,7 @@ class PeakMemory:
     def __exit__(self, *exc) -> None:
         self._stop.set()
         self._thread.join(timeout=5)
-        self.peak_mb = max(self.peak_mb, tree_pss_mb())
+        self.peak_mb = max(self.peak_mb, python_pss_mb())
 
 
 class Tracer:

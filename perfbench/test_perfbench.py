@@ -26,7 +26,7 @@ import workloads  # noqa: E402
 
 SPEC = json.loads((ROOT / "BENCHMARK.json").read_text())
 
-END_TO_END = ["setup_s", "items_per_s", "cpu_ms_per_item", "unit_s", "peak_rss_mb"]
+END_TO_END = ["setup_s", "items_per_s", "cpu_ms_per_item", "unit_s", "mem_mb"]
 WORKLOADS = ["crawl_frontier", "operator_suite"]
 
 

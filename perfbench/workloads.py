@@ -28,7 +28,6 @@ import hashlib
 import json
 import random
 import shutil
-import threading
 import time
 from dataclasses import dataclass, field, replace
 from pathlib import Path
@@ -99,6 +98,8 @@ class CrawlFrontier:
         "host13.example.com": ([], 30.0),  # crawl-delay: 2 fetches per epoch
     }
     budgets = {"host0.example.com": 12}
+    warm_epochs = 1  # the first set-up's warm-up crawl
+    traced_unit: dict = {}  # a traced run's two crawls are full crawls
     sample_rows = 6  # results rows checked against pure-Python extract_page
 
     def __init__(self, work: Path, seed: int):
@@ -112,7 +113,7 @@ class CrawlFrontier:
         self.seeds = [page_url(p, hosts, True) for p in sorted(ids)] + [
             "https://missing.example.com/review/none"
         ]
-        self._cfg = None
+        self._cfgs: dict = {}
 
     # inputs ----------------------------------------------------------------
 
@@ -140,31 +141,43 @@ class CrawlFrontier:
         with tracer.span("corpus", "materialize_corpus", reuse=True):
             return self._materialize(spark)
 
-    def warm(self, spark, pages, tracer) -> None:
-        """The corpus into the page cache."""
+    def warm(self, spark, pages, tracer, deep: bool = False) -> None:
+        """The corpus into the page cache; ``deep`` (the first set-up in
+        the JVM) also crawls ``warm_epochs`` epochs, so that the timed
+        crawl runs plans Spark has planned and the JIT has compiled."""
+        from fakepilot_spark.crawl.engine import CrawlEngine
+
         with tracer.span("sources", "warm-up scan"):
             force(pages.select("url", "html"))
+        if deep:
+            ckpt = self.work / "ckpt" / f"{self.name}-warm-up"
+            shutil.rmtree(ckpt, ignore_errors=True)
+            with tracer.span("crawl.engine", "warm-up crawl"):
+                CrawlEngine(spark, pages, self.config(ckpt, self.warm_epochs)).run()
+            shutil.rmtree(ckpt, ignore_errors=True)
 
-    def config(self, ckpt: Path):
+    def config(self, ckpt: Path, epochs: int | None = None):
+        """The crawl's config, for ``epochs`` epochs if given."""
         from fakepilot_spark.crawl.engine import CrawlConfig
 
-        if self._cfg is None:
+        epochs = epochs or self.crawl["max_epochs"]
+        if epochs not in self._cfgs:
             from checks import crawl_oracle
 
             base = CrawlConfig(
                 checkpoint_dir="", seeds=self.seeds, robots_rules=self.robots,
                 host_budgets=self.budgets, use_sketches=True,
                 pages_path=str(self.corpus_dir), pages_buckets=self.buckets,
-                **self.crawl,
+                **dict(self.crawl, max_epochs=epochs),
             )
             # bloom sized to the final seen set, so it runs at its design
             # false-positive rate rather than near-empty
             n_seen = len(crawl_oracle(self.links, base)["seen"])
-            self._cfg = replace(
+            self._cfgs[epochs] = replace(
                 base, bloom_capacity=n_seen,
                 cuckoo_capacity_per_partition=max(2 * n_seen // base.cuckoo_partitions, 1 << 10),
             )
-        return replace(self._cfg, checkpoint_dir=str(ckpt))
+        return replace(self._cfgs[epochs], checkpoint_dir=str(ckpt))
 
     # timed loop ------------------------------------------------------------
 
@@ -172,11 +185,9 @@ class CrawlFrontier:
         """Crawls from scratch, at least once, and again while the next one
         should end inside ``seconds``; checkpoints stay for :meth:`check`.
 
-        Only the epochs after the first are measured. In a fresh JVM the
-        first epoch is dominated by Spark's planning, code generation and
-        JIT for every plan the crawl runs, and on a shared 4-core host that
-        cost varies by half between runs; later epochs run the same plans
-        warm, and probe sketches built from a real epoch's delta."""
+        Each crawl is measured whole, from ``run()`` to its return: the
+        first set-up's warm-up crawl has already had Spark plan and the JIT
+        compile the plans every epoch runs."""
         from fakepilot_spark.crawl.engine import CrawlEngine
 
         out = Outcome()
@@ -188,26 +199,22 @@ class CrawlFrontier:
             cfg = self.config(ckpt)
             engine = CrawlEngine(spark, pages, cfg)
             summary = error = None
-            with _EpochWatch(ckpt / "manifests" / "epoch_00000.json") as watch:
-                try:
-                    with tracer.span("crawl.engine", "CrawlEngine.run", crawl=len(crawls)) as sid:
-                        start = tracer.now()
-                        summary = engine.run()
-                except Exception as exc:  # noqa: BLE001 - a failed crawl is a failed operation
-                    error = f"crawl raised {type(exc).__name__}: {exc}"
+            t0, cpu0 = time.perf_counter(), tree_cpu_s()
+            try:
+                with tracer.span("crawl.engine", "CrawlEngine.run", crawl=len(crawls)) as sid:
+                    start = tracer.now()
+                    summary = engine.run()
+            except Exception as exc:  # noqa: BLE001 - a failed crawl is a failed operation
+                error = f"crawl raised {type(exc).__name__}: {exc}"
+            wall, cpu = time.perf_counter() - t0, tree_cpu_s() - cpu0
             crawls.append({"ckpt": ckpt, "cfg": cfg, "summary": summary, "error": error})
-            steady = summary["epochs"][1:] if summary is not None else []
-            if steady and watch.first is not None:
-                wall = watch.end[0] - watch.first[0]
-                cpu = watch.end[1] - watch.first[1]
-                fetched = sum(e["urls_fetched"] for e in steady)
+            if summary is not None:
+                fetched = summary["total_fetched"]
                 out.items += fetched
                 out.item_rates.append(fetched / wall)
                 out.cpu_ms_per_item.append(cpu * 1000 / max(fetched, 1))
-                epoch_walls.extend(e["wall_sec"] for e in steady)
+                epoch_walls.extend(e["wall_sec"] for e in summary["epochs"])
                 _epoch_spans(tracer, summary, start, sid)
-            else:
-                wall = watch.end[0] - watch.start[0]
             out.wall_s += wall
             if out.wall_s + wall > seconds:
                 break
@@ -222,11 +229,11 @@ class CrawlFrontier:
     def check(self, spark, out: Outcome) -> tuple:
         from checks import crawl_oracle
 
-        expected = crawl_oracle(self.links, self.config(Path("")))
-        total = sum(len(e) for e in expected["fetched_per_epoch"])
         attempted = failed = 0
         notes: list = []
         for c in out.info["crawls"]:
+            expected = crawl_oracle(self.links, c["cfg"])
+            total = sum(len(e) for e in expected["fetched_per_epoch"])
             if c["summary"] is None:
                 attempted, failed = attempted + total, failed + total
                 notes.append(c["error"])
@@ -294,7 +301,8 @@ class CrawlFrontier:
         sketch, out.info["sketch_split"] = self._sketch_split(spark, ckpt, cfg, summary, tracer)
         m.update(sketch)
         rows, out.info["ledger"] = cpu_ledger(
-            spark, self, ckpt, cfg, out.info["untraced_cpu_ms_per_page"], tracer
+            spark, self, pages, ckpt, cfg, [e["epoch"] for e in summary["epochs"]],
+            out.info["untraced_cpu_ms_per_page"], tracer,
         )
         m.update(rows)
         return m
@@ -403,38 +411,6 @@ class CrawlFrontier:
         return metrics, split
 
 
-class _EpochWatch:
-    """(perf_counter, process-tree CPU) at the start, when ``marker`` (the
-    first epoch's manifest, written last in the epoch) appears, and at the
-    end; polled every 20 ms on a background thread."""
-
-    def __init__(self, marker: Path):
-        self.marker = marker
-        self.start = self.first = self.end = None
-        self._done = threading.Event()
-        self._thread = threading.Thread(target=self._poll, daemon=True)
-
-    @staticmethod
-    def _now() -> tuple:
-        return time.perf_counter(), tree_cpu_s()
-
-    def _poll(self) -> None:
-        while not self._done.wait(0.02):
-            if self.marker.exists():
-                self.first = self._now()
-                return
-
-    def __enter__(self) -> "_EpochWatch":
-        self.start = self._now()
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._done.set()
-        self._thread.join(timeout=5)
-        self.end = self._now()
-
-
 def _epoch_spans(tracer, summary: dict, start: float, parent) -> None:
     """The engine's own step laps, laid out as child spans of the crawl.
     Steps run in sequence inside an epoch, except lineage, which overlaps
@@ -491,21 +467,24 @@ class OperatorSuite:
         with tracer.span("ops", name):
             return fn(spark, str(DATA)).toPandas()
 
-    def warm(self, spark, queries, tracer) -> None:
-        """One untimed query: Python workers up, the tables in the page
-        cache."""
-        self._run(spark, queries["doc_token_stats"], "doc_token_stats", tracer)
+    warm_passes = 2  # the first set-up's warm-up passes over the queries
+    min_passes = 6
 
-    min_passes = 3
+    def warm(self, spark, queries, tracer, deep: bool = False) -> None:
+        """One query: Python workers up, the tables in the page cache;
+        ``deep`` (the first set-up in the JVM) makes ``warm_passes`` passes
+        over every query, so that the timed passes run plans Spark has
+        planned and the JIT has compiled."""
+        for name in self.order * self.warm_passes if deep else ["doc_token_stats"]:
+            self._run(spark, queries[name], name, tracer)
+    traced_unit = {"passes": 3}  # a traced run's two units: traced, untraced
 
-    def measure(self, spark, queries, seconds: float, tracer, tag: str = "run"):
-        """Whole passes over the query list: ``min_passes``, then more until
-        ``seconds`` have passed. Each figure is a median over passes, so it
-        leaves out the first pass, whose queries run for the first time in
-        this JVM: that pass is dominated by planning, code generation and
-        JIT, and varies by half between runs on a shared 4-core host. The
-        floor is a pass count, not a time budget alone, so a slow run still
-        has warm passes to report."""
+    def measure(self, spark, queries, seconds: float, tracer, tag: str = "run",
+                passes: int | None = None):
+        """Whole passes over the query list: ``min_passes`` (or ``passes``),
+        and more until ``seconds`` have passed; each figure is a median over
+        passes. The floor is a pass count, not a time budget alone, so a
+        slow run still has its medians over six passes."""
         out = Outcome()
         samples: dict = {name: [] for name in queries}
         results: dict = {}
@@ -526,7 +505,7 @@ class OperatorSuite:
             out.wall_s += t_pass
             out.item_rates.append(n / t_pass)
             out.cpu_ms_per_item.append(cpu * 1000 / max(n, 1))
-            if len(out.item_rates) >= self.min_passes and out.wall_s >= seconds:
+            if len(out.item_rates) >= (passes or self.min_passes) and out.wall_s >= seconds:
                 break
         medians = {k: median(v) for k, v in samples.items() if v}
         out.unit_s = sum(medians.values())

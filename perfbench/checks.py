@@ -94,9 +94,9 @@ def duckdb_connection(data_dir: Path):
     cq = _query_checker()
     con = duckdb.connect()
     for t in cq.TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{data_dir}/{t}.parquet')"
-        )
+        path = data_dir / f"{t}.parquet"
+        files = f"{path}/*.parquet" if path.is_dir() else str(path)
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{files}')")
     return con, cq.canon_frame
 
 

@@ -7,8 +7,8 @@ prints, as its last stdout line, one JSON object ``{correct, attempted,
 failed, metrics}``. ``--trace 0`` reports the end-to-end metrics of
 ``BENCHMARK.json``; ``--trace 1`` reports its per-layer metrics, from a run
 with spans, Spark's event log and the Python UDF profiler switched on.
-The line before it is a human-readable report: host tags, sample counts,
-``fail_frac`` and the first failure notes.
+The line before it is a human-readable report: host tags, the samples
+behind each median, ``fail_frac`` and the first failure notes.
 
 Everything the run writes goes under ``perfbench/.work`` in the checkout, and
 every process it starts (the JVM and its Python workers) has ended when it
@@ -29,8 +29,8 @@ HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 WORK = HERE / ".work"
 SETUPS = 6  # set-ups per untraced run: the first launches the JVM, setup_s
-# is the median of the other five; a traced run, which has no setup_s,
-# sets up once
+# is the median of the other five, made after the timed section; a traced
+# run, which has no setup_s, sets up once
 HEAP = "2g"  # JVM heap: leaves room for Python workers on a 4-core, 15 GB host
 
 
@@ -97,13 +97,16 @@ def run(args) -> dict:
 
     phases = {"start": time.perf_counter()}
     steal0 = cpu_steal()
-    # set-up, repeated: session start + input open + light warm-up. The
-    # first also launches the JVM, reported as session.start_s, and warms
-    # its JIT up with the workload's own plans (a short crawl, a pass over
-    # the queries); the corpus build (first run in a checkout) is left out
-    # and reported as corpus.build_s.
-    spark, setups, session_start, build_s = None, [], 0.0, None
-    for i in range(1 if args.trace else SETUPS):
+    spark = inputs = build_s = None
+    session_start = 0.0
+
+    def setup(i: int) -> float:
+        """One set-up: session start + input open + light warm-up. The
+        first also launches the JVM, reported as session.start_s, and warms
+        its JIT up with the workload's own plans (a short crawl, passes over
+        the queries); the corpus build (first run in a checkout) is left out
+        and reported as corpus.build_s."""
+        nonlocal spark, inputs, session_start, build_s
         if spark is not None:
             spark.stop()
         t = time.perf_counter()
@@ -117,7 +120,9 @@ def run(args) -> dict:
         inputs = wl.open(spark, tracer)
         with tracer.span("bench", "warm-up", setup=i):
             wl.warm(spark, inputs, tracer, deep=i == 0)
-        setups.append(time.perf_counter() - t)
+        return time.perf_counter() - t
+
+    setups = [setup(0)]
     phases["setup"] = time.perf_counter()
 
     layers: dict = {}
@@ -144,13 +149,20 @@ def run(args) -> dict:
         plain_rate = median(plain.item_rates or [0.0])
         traced_rate = median(out.item_rates or [0.0])
         layers["trace.overhead_frac"] = 1.0 - traced_rate / plain_rate if plain_rate else 0.0
+        phases["check"] = time.perf_counter()
     else:
         with PeakMemory() as mem:
             out = wl.measure(spark, inputs, args.seconds, tracer)
         phases["measure"] = time.perf_counter()
-        mem_mb = mem.peak_mb + jvm_live_mb(spark._jvm)
+        mem_split = {"python_pss_peak": mem.peak_mb, "jvm_live": jvm_live_mb(spark._jvm)}
+        mem_mb = sum(mem_split.values())
         out.add_check(wl.check(spark, out))
-    phases["check"] = time.perf_counter()
+        phases["check"] = time.perf_counter()
+        # the other set-ups come after the timed section: a new session in
+        # the same JVM runs its first plans slower again, and would leave
+        # the timed work half warm
+        setups += [setup(i) for i in range(1, SETUPS)]
+        phases["setups"] = time.perf_counter()
     _shutdown(spark)
     phases["stop"] = time.perf_counter()
 
@@ -187,14 +199,18 @@ def run(args) -> dict:
     report = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         **tags,
-        "setup_samples": len(setups),
+        "session_start_s": round(session_start, 3),
+        "setup_s_each": [round(x, 3) for x in setups],
         "phase_s": {k: round(v - phases["start"], 2) for k, v in phases.items() if k != "start"},
         "iterations": len(out.item_rates),
+        "item_rates": [round(x, 3) for x in out.item_rates],
         "items": out.items,
+        "mem_mb_split": {k: round(v, 1) for k, v in mem_split.items()} if not args.trace else None,
         "fail_frac": out.failed / max(out.attempted, 1),
         "notes": out.notes[:10],
         "trace_file": str(trace_file.relative_to(ROOT)) if trace_file else None,
-        **{k: _jsonable(out.info[k]) for k in ("sketch_split", "ledger") if k in out.info},
+        **{k: _jsonable(out.info[k]) for k in ("sketch_split", "ledger", "query_medians")
+           if k in out.info},
     }
     return {
         "report": report,

@@ -72,6 +72,20 @@ def test_seed_changes_query_order_not_the_set():
     assert sorted(a.order) == sorted(b.order) == sorted(workloads.QUERIES)
 
 
+def test_scaled_tables_keep_keys_unique(tmp_path):
+    import pyarrow.parquet as pq
+
+    workloads.scale_tables(workloads.DATA, tmp_path / "t", {"documents": ("doc_id", 3)})
+    src = pq.read_table(workloads.DATA / "documents.parquet")
+    out = pq.read_table(tmp_path / "t" / "documents.parquet")
+    ids = out["doc_id"].to_pylist()
+    assert len(ids) == len(set(ids)) == 3 * src.num_rows
+    assert sorted(out["text"].to_pylist()) == sorted(src["text"].to_pylist() * 3)
+    assert len(list((tmp_path / "t" / "documents.parquet").iterdir())) == workloads.TABLE_FILES
+    assert (tmp_path / "t" / "orders.parquet").read_bytes() == (
+        workloads.DATA / "orders.parquet").read_bytes()
+
+
 def test_corrupted_crawl_output_fails(tmp_path):
     wl = workloads.CrawlFrontier(tmp_path, 1)
     expected, fetched, seen = _oracle_outputs(wl)

@@ -14,12 +14,13 @@ Why each workload exists:
   false-positive rate.
 * ``operator_suite`` — a fixed list of ``ops.registry()`` queries, the
   cheapest of each ops module, on the TPC-H-style tables committed in
-  ``perfbench/data``. No crawl calls this code; cuts there must not slow it.
+  ``perfbench/data``, the two they read replicated (:data:`SCALE`). No crawl
+  calls this code; cuts there must not slow it.
 
-The seed picks the crawl seed list and the query order; the program sees
+The seed picks the crawl seed list and the query orders; the program sees
 only those inputs. The crawl corpus depends only on its generation
-parameters and is built once per checkout. README.md lists the workloads
-considered and left out, and why.
+parameters and is built once per checkout, as are the replicated tables.
+README.md lists the workloads considered and left out, and why.
 """
 
 from __future__ import annotations
@@ -444,15 +445,62 @@ QUERIES = (
 )
 
 
+# The committed tables are so small (500 documents, 15000 orders) that a
+# query on them is almost all Spark's fixed per-query latency: planning,
+# scheduling and hand-offs between threads, on about one busy core. On a
+# shared virtual machine that latency moves with the host by half between
+# runs. So the suite reads the tables its queries use replicated, each copy's
+# key shifted to stay unique, and each query keeps every core busy with the
+# program's own work.
+SCALE = {"documents": ("doc_id", 60), "orders": ("o_orderkey", 20)}
+TABLE_FILES = 8  # parquet files per replicated table: one scan task per file
+
+
+def scale_tables(src: Path, dst: Path, scale: dict = SCALE) -> None:
+    """Writes ``src``'s tables to ``dst``: those in ``scale`` as ``factor``
+    copies with the key column shifted by the table's key range per copy,
+    split into :data:`TABLE_FILES` files; the others unchanged."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    dst.mkdir(parents=True)
+    for f in sorted(src.glob("*.parquet")):
+        if f.stem not in scale:
+            shutil.copyfile(f, dst / f.name)
+            continue
+        key, factor = scale[f.stem]
+        table = pq.read_table(f)
+        i, typ = table.schema.get_field_index(key), table.schema.field(key).type
+        span = pc.max(table[key]).as_py() + 1
+        table = pa.concat_tables(
+            table.set_column(i, key, pc.add(table[key], pa.scalar(k * span, typ)))
+            for k in range(factor)
+        )
+        (dst / f.name).mkdir()
+        step = -(-table.num_rows // TABLE_FILES)
+        for j in range(TABLE_FILES):
+            pq.write_table(table.slice(j * step, step), dst / f.name / f"part-{j}.parquet")
+
+
 class OperatorSuite:
     name = "operator_suite"
 
     def __init__(self, work: Path, seed: int):
-        self.order = list(QUERIES)
-        random.Random(seed).shuffle(self.order)
+        self.rng = random.Random(seed)
+        self.order = self.shuffled()  # the first pass's order
+        tag = hashlib.md5(json.dumps(SCALE, sort_keys=True).encode()).hexdigest()[:10]
+        self.data = work / "tables" / f"{self.name}-{tag}" if work else DATA
 
     def build(self, spark, tracer) -> float:
-        return 0.0  # the tables are committed
+        """Replicates the committed tables once per checkout; the build is
+        the benchmark's, not the program's, so it reports 0."""
+        stamp = self.data / "_perfbench_build.json"
+        if not stamp.exists():
+            shutil.rmtree(self.data, ignore_errors=True)
+            scale_tables(DATA, self.data)
+            stamp.write_text(json.dumps(SCALE))
+        return 0.0
 
     def open(self, spark, tracer):
         from fakepilot_spark.ops import registry
@@ -461,40 +509,50 @@ class OperatorSuite:
             queries, _ = registry()
         return {name: queries[name] for name in self.order}
 
-    @staticmethod
-    def _run(spark, fn, name, tracer):
+    def shuffled(self) -> list:
+        """A query order drawn from the seed: each pass has its own, so a
+        query's time does not depend on one fixed predecessor."""
+        return self.rng.sample(QUERIES, len(QUERIES))
+
+    def _run(self, spark, fn, name, tracer):
         """One query, collected: its result feeds the oracle check."""
         with tracer.span("ops", name):
-            return fn(spark, str(DATA)).toPandas()
+            return fn(spark, str(self.data)).toPandas()
 
-    warm_passes = 2  # the first set-up's warm-up passes over the queries
-    min_passes = 6
+    warm_passes = 3  # the first set-up's warm-up passes over the queries
+    min_passes = 5
 
     def warm(self, spark, queries, tracer, deep: bool = False) -> None:
         """One query: Python workers up, the tables in the page cache;
         ``deep`` (the first set-up in the JVM) makes ``warm_passes`` passes
         over every query, so that the timed passes run plans Spark has
         planned and the JIT has compiled."""
-        for name in self.order * self.warm_passes if deep else ["doc_token_stats"]:
-            self._run(spark, queries[name], name, tracer)
+        if not deep:
+            self._run(spark, queries["doc_token_stats"], "doc_token_stats", tracer)
+            return
+        for _ in range(self.warm_passes):
+            for name in self.shuffled():
+                self._run(spark, queries[name], name, tracer)
+
     traced_unit = {"passes": 3}  # a traced run's two units: traced, untraced
 
     def measure(self, spark, queries, seconds: float, tracer, tag: str = "run",
                 passes: int | None = None):
-        """Whole passes over the query list: ``min_passes`` (or ``passes``),
-        and more until ``seconds`` have passed; each figure is a median over
-        passes. The floor is a pass count, not a time budget alone, so a
-        slow run still has its medians over six passes."""
+        """Whole passes over the query list, each in its own seeded order:
+        ``min_passes`` (or ``passes``), and more until ``seconds`` have
+        passed; each figure is a median over passes. The floor is a pass
+        count, not a time budget alone, so a slow run still has its medians
+        over five passes."""
         out = Outcome()
         samples: dict = {name: [] for name in queries}
         results: dict = {}
         raised: dict = {}
         while True:
             cpu0, t_pass, n = tree_cpu_s(), 0.0, 0
-            for name, fn in queries.items():
+            for name in self.shuffled():
                 t0 = time.perf_counter()
                 try:
-                    results[name] = self._run(spark, fn, name, tracer)
+                    results[name] = self._run(spark, queries[name], name, tracer)
                     samples[name].append(time.perf_counter() - t0)
                     n += 1
                 except Exception as exc:  # noqa: BLE001 - counted as a failed query
@@ -523,7 +581,7 @@ class OperatorSuite:
         attempted = len(out.item_rates) * len(self.order)
         failed = attempted - sum(len(v) for v in out.info["samples"].values())  # raised
         notes = list(out.info["raised"].values())
-        con, canon = duckdb_connection(DATA)
+        con, canon = duckdb_connection(self.data)
         try:
             for name, pdf in out.info.pop("results").items():
                 why = query_mismatch(pdf, con.execute(oracles[name]).fetchdf(), canon)

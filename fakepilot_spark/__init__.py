@@ -7,4 +7,8 @@ host-prefix-partitioned URL frontier with bloom/cuckoo URL-seen sketches,
 broadcast robots/politeness dimensions, and resumable epoch checkpoints.
 """
 
+from . import pyworker
+
 __version__ = "0.1.0"
+
+pyworker.install()

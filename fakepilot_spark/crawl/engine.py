@@ -30,6 +30,7 @@ absent in sandbox, SURVEY.md §8); on a real cluster the writes become
 from __future__ import annotations
 
 import json
+import os
 import time
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -73,6 +74,22 @@ class CrawlConfig:
 
 def _manifest_path(ckpt: Path, epoch: int) -> Path:
     return ckpt / "manifests" / f"epoch_{epoch:05d}.json"
+
+
+def _write_manifest(path: Path, summary: dict) -> None:
+    """The commit point: written tmp + rename, so a crash leaves either no
+    manifest or a whole one (a leftover ``.tmp`` never matches ``*.json``)."""
+    tmp = path.with_name(path.name + ".tmp")
+    tmp.write_text(json.dumps(summary))
+    os.replace(tmp, path)
+
+
+def _read_manifest(path: Path) -> dict | None:
+    """A committed manifest, or None when it is missing or torn."""
+    try:
+        return json.loads(path.read_text())
+    except (OSError, ValueError):
+        return None
 
 
 class CrawlEngine:
@@ -145,6 +162,7 @@ class CrawlEngine:
         epochs = [
             int(p.stem.split("_")[1])
             for p in (self.ckpt / "manifests").glob("epoch_*.json")
+            if _read_manifest(p) is not None
         ]
         return max(epochs, default=-1)
 
@@ -170,10 +188,9 @@ class CrawlEngine:
     def _pending_count(self, prev_epoch: int) -> int | None:
         """Pending-frontier row count after ``prev_epoch``, from its committed
         manifest (zero-cost — no Spark job). None when unknown."""
-        m = _manifest_path(self.ckpt, prev_epoch)
-        if not m.exists():
+        s = _read_manifest(_manifest_path(self.ckpt, prev_epoch))
+        if s is None:
             return None
-        s = json.loads(m.read_text())
         if "pending_after" in s:
             return int(s["pending_after"])
         if "seeded" in s:
@@ -452,9 +469,8 @@ class CrawlEngine:
                 # front of the whole crawl. Crash before the build lands →
                 # _resolve_bloom(-1) rebuilds from the committed seed delta.
                 self._submit_sketch_build(-1, None)
-            _manifest_path(self.ckpt, -1).parent.mkdir(exist_ok=True)
-            _manifest_path(self.ckpt, -1).write_text(
-                json.dumps({"epoch": -1, "seeded": len(cfg.seeds)})
+            _write_manifest(
+                _manifest_path(self.ckpt, -1), {"epoch": -1, "seeded": len(cfg.seeds)}
             )
             start_epoch = 0
 
@@ -514,8 +530,6 @@ class CrawlEngine:
         Written atomically (tmp + rename) and strictly AFTER the cuckoo
         table: ``bloom.bin`` present ⇒ the epoch's whole sketch set is
         complete. The deferred-build resume path relies on this marker."""
-        import os
-
         d = self.ckpt / "sketches" / f"epoch={epoch}"
         d.mkdir(parents=True, exist_ok=True)
         if bloom is not None:
@@ -841,7 +855,7 @@ class CrawlEngine:
             "wall_sec": round(time.time() - t0, 3),
             "steps": steps,
         }
-        _manifest_path(self.ckpt, epoch).write_text(json.dumps(summary))
+        _write_manifest(_manifest_path(self.ckpt, epoch), summary)
         batch.unpersist()
         return summary
 

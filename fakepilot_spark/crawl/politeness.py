@@ -8,6 +8,8 @@ the frontier (one row per host), so the join is always a broadcast hash join
 
 from __future__ import annotations
 
+import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -37,17 +39,24 @@ POLITENESS_SCHEMA = StructType(
 )
 
 
+def _local_df(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """A small in-memory dimension that plans as a ``LocalTableScan``, empty or
+    not: it is handed over as Arrow, so each epoch's broadcast of it is a
+    JVM-only job. (A Python list plans as a scan over a PythonRDD, and every
+    broadcast of it would start Python tasks to unpickle a few rows.)"""
+    pdf = pd.DataFrame(rows, columns=schema.fieldNames())
+    return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False), schema)
+
+
 def robots_df(spark: SparkSession, rules: dict) -> DataFrame:
     """rules: host -> (disallow_prefixes, crawl_delay_seconds)."""
     rows = [(h, list(d), float(cd)) for h, (d, cd) in sorted(rules.items())]
-    if not rows:
-        rows = []
-    return spark.createDataFrame(rows, ROBOTS_SCHEMA)
+    return _local_df(spark, rows, ROBOTS_SCHEMA)
 
 
 def politeness_df(spark: SparkSession, budgets: dict) -> DataFrame:
     rows = [(h, int(b)) for h, b in sorted(budgets.items())]
-    return spark.createDataFrame(rows, POLITENESS_SCHEMA)
+    return _local_df(spark, rows, POLITENESS_SCHEMA)
 
 
 def apply_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:

@@ -1,23 +1,26 @@
-"""Build dist/fakepilot_spark.zip for spark-submit --py-files."""
+"""Build the spark-submit --py-files zip of the package.
+
+    python scripts/build_dist.py [OUT]   # default: dist/fakepilot_spark.zip
+"""
 
 from __future__ import annotations
 
+import sys
 import zipfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 
 
-def main() -> None:
-    out = REPO / "dist" / "fakepilot_spark.zip"
-    out.parent.mkdir(exist_ok=True)
-    # Deterministic archive: fixed per-entry timestamps so rebuilding from
-    # unchanged sources is byte-identical (the packaging test rebuilds on
-    # every run; mtime-bearing entries would dirty the committed artifact).
+def main(out: Path) -> None:
+    out.parent.mkdir(parents=True, exist_ok=True)
+    # Deterministic archive: fixed per-entry timestamps and sorted entries, so
+    # rebuilding from unchanged sources with the same zlib is byte-identical.
+    # Entry names are POSIX paths on every platform (zip's separator is '/').
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         for py in sorted((REPO / "fakepilot_spark").rglob("*.py")):
             info = zipfile.ZipInfo(
-                str(py.relative_to(REPO)), date_time=(2020, 1, 1, 0, 0, 0)
+                py.relative_to(REPO).as_posix(), date_time=(2020, 1, 1, 0, 0, 0)
             )
             info.compress_type = zipfile.ZIP_DEFLATED
             info.external_attr = 0o644 << 16
@@ -26,4 +29,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(Path(sys.argv[1]) if len(sys.argv) > 1 else REPO / "dist" / "fakepilot_spark.zip")

@@ -8,6 +8,9 @@ invocation spends at most REPS attempt slots and a bad era can eat all of
 them on gate-waits. Usage:
 
     python scripts/sample_until.py large 12600   # pair, budget seconds
+
+It exits with status 1 after MAX_QUICK_FAILS consecutive inner runs that fail
+within QUICK_FAIL_S (an import error or a bad argument, not a degraded host).
 """
 import subprocess
 import sys
@@ -18,13 +21,15 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from scaling_bench import REV, TARGET_FAIR_PAIRS, collect_pairs  # noqa: E402
 
 PAIRS = {"small": (2, 8, 16000), "large": (8, 32, 16000)}
+QUICK_FAIL_S = 60.0
+MAX_QUICK_FAILS = 3
 which = sys.argv[1] if len(sys.argv) > 1 else "large"
 budget = float(sys.argv[2]) if len(sys.argv) > 2 else 10800.0
 deadline = time.time() + budget
 repo = Path(__file__).resolve().parent.parent
 log = repo / "BENCH" / f"sample_until_{which}.log"
 
-invocation = 0
+invocation = quick_fails = 0
 while time.time() < deadline:
     fair = [p for p in collect_pairs(PAIRS[which], REV) if p["fair"]]
     print(f"[sample_until] fair={len(fair)}/{TARGET_FAIR_PAIRS} "
@@ -33,8 +38,9 @@ while time.time() < deadline:
         print("[sample_until] sample complete", flush=True)
         break
     invocation += 1
+    started = time.time()
     with log.open("a") as f:
-        subprocess.run(
+        rc = subprocess.run(
             # --skip-suite: reuse the committed suite.json medians (measured
             # in a fair era) instead of re-running the 3x operator suite per
             # invocation — this wrapper exists precisely because the host is
@@ -42,7 +48,13 @@ while time.time() < deadline:
             [sys.executable, "scripts/scaling_bench.py", "--pair", which,
              "--skip-suite"],
             cwd=str(repo), stdout=f, stderr=subprocess.STDOUT,
-        )
+        ).returncode
+    quick = rc != 0 and time.time() - started < QUICK_FAIL_S
+    quick_fails = quick_fails + 1 if quick else 0
+    if quick_fails >= MAX_QUICK_FAILS:
+        print(f"[sample_until] {quick_fails} inner runs in a row failed at once "
+              f"(last exit status {rc}); see {log}", flush=True)
+        sys.exit(1)
     time.sleep(30)
 else:
     print("[sample_until] deadline reached", flush=True)

@@ -193,3 +193,40 @@ def test_resume_rebuilds_missing_sketches(spark, corpus_df, tmp_path_factory, en
     assert e2.fetched_urls_in_order() == full_engine.fetched_urls_in_order()
     # the rebuilt sketches were committed under the epoch that lacked them
     assert (sk / "bloom.bin").exists()
+
+
+def test_torn_or_tmp_manifest_is_not_committed(tmp_path):
+    """A crash while a manifest is written leaves a ``.tmp`` (or, from a
+    writer that is not atomic, a torn JSON file): neither is a commit."""
+    from fakepilot_spark.crawl.engine import _manifest_path, _write_manifest
+
+    eng = CrawlEngine.__new__(CrawlEngine)  # state io only: no Spark
+    eng.ckpt = tmp_path
+    (tmp_path / "manifests").mkdir()
+    _write_manifest(_manifest_path(tmp_path, -1), {"epoch": -1, "seeded": 3})
+    _write_manifest(_manifest_path(tmp_path, 0), {"epoch": 0, "pending_after": 5})
+    assert sorted(p.name for p in (tmp_path / "manifests").iterdir()) == [
+        "epoch_-0001.json", "epoch_00000.json",
+    ]
+    full = (tmp_path / "manifests" / "epoch_00000.json").read_text()
+    _manifest_path(tmp_path, 1).write_text(full[: len(full) // 2])  # torn
+    (tmp_path / "manifests" / "epoch_00002.json.tmp").write_text(full)
+    assert eng.last_committed_epoch() == 0
+    assert eng._pending_count(0) == 5
+    assert eng._pending_count(1) is None
+    assert eng._pending_count(2) is None
+
+
+def test_resume_over_torn_manifest(spark, corpus_df, tmp_path_factory, engine_run):
+    """Epoch 1's data committed but its manifest torn: resume re-runs epoch 1
+    and ends where the uninterrupted run does."""
+    full_engine, _ = engine_run
+    ckpt = tmp_path_factory.mktemp("crawl_torn")
+    e1 = _mk_engine(spark, corpus_df, ckpt)
+    e1.run(max_epochs=2)
+    m = ckpt / "manifests" / "epoch_00001.json"
+    m.write_text(m.read_text()[:10])
+    e2 = _mk_engine(spark, corpus_df, ckpt)
+    assert e2.last_committed_epoch() == 0
+    e2.run()
+    assert e2.fetched_urls_in_order() == full_engine.fetched_urls_in_order()

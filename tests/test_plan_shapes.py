@@ -77,6 +77,35 @@ def test_crawl_drain_is_two_phase(spark):
     assert "Window" not in plan_fast and "Sort" not in plan_fast
 
 
+@pytest.mark.parametrize(
+    "rules,budgets",
+    [({"h1": (["/private"], 20.0), "h2": ([], 35.0)}, {"h1": 1}), ({}, {})],
+    ids=["dims", "empty-dims"],
+)
+def test_admission_dims_are_local(spark, rules, budgets):
+    """Robots and politeness dims plan as LocalTableScan, empty or not, so
+    broadcasting them each epoch starts no Python task (a PythonRDD leaf
+    would: ``Scan ExistingRDD``)."""
+    from fakepilot_spark.crawl.frontier import with_frontier_columns
+    from fakepilot_spark.crawl.politeness import (
+        admit_per_host, apply_robots, politeness_df, robots_df,
+    )
+
+    urls = spark.range(0, 100).select(
+        F.concat(F.lit("https://h"), F.col("id") % 3, F.lit("/review/"), F.col("id")).alias("url")
+    )
+    frontier = with_frontier_columns(urls, F.lit(0), epoch=0)
+    robots = robots_df(spark, rules)
+    admitted = admit_per_host(
+        apply_robots(frontier, robots), politeness_df(spark, budgets),
+        default_budget=2, robots=robots, epoch_seconds=60.0,
+    )
+    plan = _plan(admitted)
+    # (empty dims are optimized away altogether)
+    assert ("LocalTableScan" in plan) == bool(rules), plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+
 def test_source_cap_sample_is_two_phase(spark):
     """No unsalted per-source window may sort a full stratum: the deepest
     row_number Window must be partitioned by (source, csalt), and the exact

@@ -5,11 +5,11 @@ dist/fakepilot_spark.zip jobs/crawl_job.py`` (BASELINE.json:6). The unit
 suite imports the package from the repo checkout, so packaging bugs (a
 module missing from the zip, an import that only resolves against the
 checkout, a job script that secretly needs the repo on sys.path) are
-invisible to it. This test builds the zip fresh, copies the job script to
-a directory OUTSIDE the repo (the script prepends only its own parent
-tree to sys.path), and runs a real spark-submit: every fakepilot_spark
-import must resolve from the --py-files zip alone, exactly as on a
-cluster whose executors never see the checkout.
+invisible to it. This test builds the zip fresh into a temp dir, copies
+the job script to a directory OUTSIDE the repo (the script prepends only
+its own parent tree to sys.path), and runs a real spark-submit: every
+fakepilot_spark import must resolve from the --py-files zip alone, exactly
+as on a cluster whose executors never see the checkout.
 """
 
 from __future__ import annotations
@@ -28,25 +28,39 @@ REPO = Path(__file__).resolve().parent.parent
 
 
 @pytest.fixture(scope="module")
-def dist_zip() -> Path:
+def dist_zip(tmp_path_factory) -> Path:
+    # built into a temp dir: the committed dist/ artifact is never rewritten
+    path = tmp_path_factory.mktemp("dist") / "fakepilot_spark.zip"
     out = subprocess.run(
-        [sys.executable, str(REPO / "scripts" / "build_dist.py")],
+        [sys.executable, str(REPO / "scripts" / "build_dist.py"), str(path)],
         capture_output=True, text=True, check=True, cwd=str(REPO),
     )
-    path = REPO / "dist" / "fakepilot_spark.zip"
     assert path.exists(), out.stdout
     return path
+
+
+def _package_modules() -> set:
+    return {
+        p.relative_to(REPO).as_posix()
+        for p in (REPO / "fakepilot_spark").rglob("*.py")
+    }
 
 
 def test_zip_contains_every_package_module(dist_zip):
     with zipfile.ZipFile(dist_zip) as zf:
         shipped = set(zf.namelist())
-    expected = {
-        str(p.relative_to(REPO))
-        for p in (REPO / "fakepilot_spark").rglob("*.py")
-    }
+    expected = _package_modules()
     assert expected, "package has no modules?"
     assert expected <= shipped, sorted(expected - shipped)
+
+
+def test_committed_dist_zip_is_current():
+    """dist/fakepilot_spark.zip ships every module and each one's current
+    source (rebuild with scripts/build_dist.py after editing the package)."""
+    with zipfile.ZipFile(REPO / "dist" / "fakepilot_spark.zip") as zf:
+        shipped = {n: zf.read(n) for n in zf.namelist()}
+    for name in _package_modules():
+        assert shipped.get(name) == (REPO / name).read_bytes(), name
 
 
 def test_spark_submit_py_files_runs_without_repo_on_path(dist_zip, tmp_path):
